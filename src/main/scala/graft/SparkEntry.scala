@@ -1315,10 +1315,10 @@ object SparkEntry {
     // to one exact decimal(38,0) floor division) — the RRF fusion stays
     // pure BIGINT, so the whole hybrid ranking is hash-exact
     "ann_hybrid_bm25" -> ((s, d) =>
-      // r21: pools from the shared model store (bm25KwPoolCached /
-      // vecPoolCached) — the same fitted artifacts the S24/S25 serving
-      // queries collect, built once per (corpus, params) instead of
-      // refit per query; fusion body unchanged (rrfFusePools)
+      // pools from the in-session cache (bm25KwPoolCached /
+      // vecPoolCached) — the same pool frames the S24/S25 serving
+      // queries collect, built once per session instead of per query;
+      // fusion body unchanged (rrfFusePools)
       Similarity.hybridBm25TopKCached(s, d,
         queryTerms(s, d), queryVec(s, d), 10)),
     // L39: c-TF-IDF topic keywords per IVF cluster (the BERTopic
@@ -2568,7 +2568,7 @@ object SparkEntry {
       |FROM dg LEFT JOIN tc USING (node)""".stripMargin
 
   /** SQL VALUES rows for a centroid model: `(l, c DOUBLE[], nrm)` — the
-    * per-list norm is the EXACT driver value ([[Similarity]]'s safeNorms:
+    * per-list norm is the EXACT driver value ([[graft.functions.IvfAssign]]'s safeNorms:
     * left-to-right Σx², sqrt, zero-norm → 1.0), embedded as a literal so
     * the oracle's cosine denominators are bit-identical to the Spark
     * plan's. Doubles print via java.lang.Double.toString (shortest
@@ -2592,7 +2592,7 @@ object SparkEntry {
     * rule), replicated by ORDER BY s DESC, l DESC. */
   /** Shared base CTEs for every IVF-model oracle: centroid VALUES,
     * corpus as DOUBLE[] vectors, and per-(vector, list) cosine scores —
-    * the SQL twin of [[Similarity]]'s `centroidScores`. */
+    * the SQL twin of [[graft.functions.IvfAssign]]'s list scores. */
   private def ivfBaseCtes(cents: Array[Array[Double]]): String =
     s"""cents(l, c, nrm) AS (VALUES
        |    ${centsValuesSql(cents)}),
@@ -2604,8 +2604,8 @@ object SparkEntry {
        |  FROM emb e CROSS JOIN cents c)""".stripMargin
 
   /** Top-2 probe lists per vector + the per-list deterministic cap —
-    * [[Similarity.withIvfTop2]] and the maxList row_number guard shared
-    * by knnGraphIvf / nearDupPairsIvf. */
+    * [[graft.functions.IvfAssign]]'s top2 and the per-list maxList cap
+    * shared by knnGraphIvf / nearDupPairsIvf. */
   private def ivfCappedCtes(maxList: Int, dim: Int): String =
     s"""top2 AS (SELECT doc_id, l AS probe FROM (
        |  SELECT doc_id, l, row_number() OVER (PARTITION BY doc_id
@@ -2623,7 +2623,7 @@ object SparkEntry {
        |    ON a.probe = b.probe AND a.doc_id < b.doc_id)""".stripMargin
 
   /** The directed top-k ranking over the capped in-list candidates —
-    * [[Similarity.knnGraphIvf]]'s tail: duplicate-probe collapse (max),
+    * [[Similarity.knnGraphIvf]]'s merge: duplicate-probe collapse (max),
     * per-src rank on the RAW cosine, 4dp round after the cut. */
   private def ivfKnnCte(k: Int): String =
     s"""cc AS (SELECT src, dst, MAX(dp / den) AS cos FROM (

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +26,8 @@ object Similarity {
     Array.fill(numPlanes, dim)(rnd.nextGaussian())
   }
 
-  import graft.functions.VectorExprs.{dot, norm2}
+  import graft.functions.IvfAssign
+  import graft.functions.VectorExprs.{dot, ivfAssign, norm2}
 
   private def dotLit(vecCol: Column, q: Array[Double]): Column =
     dot(vecCol, typedlit(q))
@@ -78,23 +80,7 @@ object Similarity {
           lit(terms.toArray))).as("_kw"))
       .filter(col("_kw") > 0)
       .orderBy(col("_kw").desc, col("id")).limit(poolK)
-    val kwRanked = kwPool.withColumn("kw_rank", row_number().over(
-      Window.orderBy(col("_kw").desc, col("id"))))
-    val vecPool = cosineToQuery(emb, vecCol, q)
-      .filter(col("cos").isNotNull)
-      .select(col(vecIdCol).as("id"), (round(col("cos"), 4) + 0.0).as("_cos"))
-      .orderBy(col("_cos").desc, col("id")).limit(poolK)
-    val vecRanked = vecPool.withColumn("vec_rank", row_number().over(
-      Window.orderBy(col("_cos").desc, col("id"))))
-    kwRanked.select(col("id"), col("kw_rank"))
-      .join(vecRanked.select(col("id"), col("vec_rank")), Seq("id"), "full_outer")
-      .select(col("id"),
-        (coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + kw_rank)"), lit(0L)) +
-         coalesce(expr("CAST(1000000000 AS BIGINT) div (60 + vec_rank)"), lit(0L)))
-          .as("rrf"),
-        coalesce(col("kw_rank").cast("long"), lit(0L)).as("kw_rank"),
-        coalesce(col("vec_rank").cast("long"), lit(0L)).as("vec_rank"))
-      .orderBy(col("rrf").desc, col("id")).limit(k)
+    rrfFusePools(kwPool, vecPoolDf(emb, vecIdCol, vecCol, q, poolK), k)
   }
 
   /** L51: BM25-scored HYBRID retrieval — [[hybridTopK]] with the keyword
@@ -151,10 +137,9 @@ object Similarity {
   }
 
   /** Cached face of [[hybridBm25TopK]] over the standard corpus tables —
-    * the pools come from [[bm25KwPoolCached]]/[[vecPoolCached]], so the
-    * fitted index artifacts are built once per (corpus, parameters) and
-    * shared with the S24/S25 serving queries instead of refit per query
-    * (the r17-adjudicated refit class; the NB/ppl model-cache precedent). */
+    * the pools come from [[bm25KwPoolCached]]/[[vecPoolCached]], so each
+    * (corpus, query) pool is built once per session and shared with the
+    * S24/S25 serving queries instead of rebuilt per query. */
   def hybridBm25TopKCached(spark: org.apache.spark.sql.SparkSession,
                            sfDir: String, terms: Seq[String], q: Array[Double],
                            k: Int, poolK: Int = 100): DataFrame =
@@ -162,32 +147,33 @@ object Similarity {
       vecPoolCached(spark, sfDir, q, poolK), k)
 
   /** [[bm25KwPoolDf]] over the corpus documents table, built once per
-    * (corpus, terms, poolK) in the shared model store. The defining
-    * (score desc, id) order is RE-APPLIED after the store round-trip
-    * (parquet read-back order is not guaranteed); values are exact longs,
-    * so the loaded pool is bit-identical to the fresh build. */
+    * (session, corpus, terms, poolK) in the IN-SESSION tier: the pool is
+    * keyed on the query's terms, so it is a query result, which the
+    * durable model store never holds. The defining (score desc, id) order
+    * is re-applied over the checkpoint, so collected pools keep it. */
   def bm25KwPoolCached(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                        terms: Seq[String], poolK: Int): DataFrame =
-    graft.SessionCache.durableFrame(spark,
+    graft.SessionCache.getOrBuild(spark,
         s"bm25KwPool:$sfDir:${terms.mkString(" ")}:$poolK",
         s"$sfDir/documents.parquet")(
       bm25KwPoolDf(graft.Tables.documents(spark, sfDir), "doc_id", "text",
-        terms, poolK))
+        terms, poolK).localCheckpoint())
       .orderBy(col("_kw").desc, col("id"))
 
   /** [[vecPoolDf]] over the corpus embeddings table, built once per
-    * (corpus, query vector, poolK); same re-applied defining order. The
-    * tag carries the query vector's full-precision digest. */
+    * (session, corpus, query vector, poolK) in the in-session tier like
+    * [[bm25KwPoolCached]]; the tag carries the query vector's
+    * full-precision digest. */
   def vecPoolCached(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                     q: Array[Double], poolK: Int): DataFrame = {
     val qSig = java.security.MessageDigest.getInstance("MD5")
       .digest(q.map(java.lang.Double.doubleToRawLongBits)
         .mkString(",").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    graft.SessionCache.durableFrame(spark, s"vecPool:$sfDir:$qSig:$poolK",
+    graft.SessionCache.getOrBuild(spark, s"vecPool:$sfDir:$qSig:$poolK",
         s"$sfDir/embeddings.parquet")(
       vecPoolDf(graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        q, poolK))
+        q, poolK).localCheckpoint())
       .orderBy(col("_cos").desc, col("id"))
   }
 
@@ -244,10 +230,8 @@ object Similarity {
     * in (cos desc, id) order — shared like [[bm25KwPoolDf]]. */
   def vecPoolDf(emb: DataFrame, vecIdCol: String, vecCol: String,
                 q: Array[Double], poolK: Int): DataFrame =
-    cosineToQuery(emb, vecCol, q)
-      .filter(col("cos").isNotNull)
-      .select(col(vecIdCol).as("id"), (round(col("cos"), 4) + 0.0).as("_cos"))
-      .orderBy(col("_cos").desc, col("id")).limit(poolK)
+    bruteForceTopK(emb, vecIdCol, vecCol, q, poolK)
+      .select(col(vecIdCol).as("id"), col("cos").as("_cos"))
 
   /** Collected BM25 model for the SERVING face (S24): per-term LnFix idf
     * micro-nats plus the corpus scalars (N, total token length). The idf
@@ -311,11 +295,7 @@ object Similarity {
     * before trusting an approximate index in production (the
     * emb_matryoshka pattern, applied to the index instead of the
     * embedding). Both sides are batch-shaped: exact = [[batchTopK]]'s one
-    * scan; the LSH side is ONE bucketed scan joined (broadcast
-    * nested-loop against the B-row query-literal frame — the
-    * parameter-frame crossJoin convention) on the Hamming-ball predicate
-    * `bit_count(bucket ⊕ qbucket) ≤ maxHamming`, exact cosine within,
-    * rank ≤ k per query. Output (query_id, n_lsh, overlap@k) — exact
+    * scan, the LSH side [[lshRanked]]'s. Output (query_id, n_lsh, overlap@k) — exact
     * integers, fully oracle-checked. A query whose LSH candidates are
     * empty (possible in principle) still reports with overlap 0 via the
     * left join from the exact side's query list. */
@@ -323,25 +303,8 @@ object Similarity {
                     queries: Seq[(Long, Array[Double])], k: Int,
                     planes: Array[Array[Double]],
                     maxHamming: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val exact = batchTopK(emb, idCol, vecCol, queries, k)
-    val qdf = broadcast(queries.map { case (qid, q) =>
-      (qid, bucketOf(q, planes), q.toSeq,
-        math.sqrt(q.map(x => x * x).sum))
-    }.toDF("query_id", "qbucket", "qvec", "qn"))
-    val v = col(vecCol).cast("array<double>")
-    val lsh = withBucket(emb, vecCol, planes)
-      .join(qdf, bit_count(col("bucket").bitwiseXOR(col("qbucket"))
-        .cast("long")) <= maxHamming)
-      .select(col("query_id"), col(idCol).cast("long").as("vec_id"),
-        try_divide(dot(v, col("qvec").cast("array<double>")),
-          graft.functions.VectorExprs.norm2(v) * col("qn")).as("cos"))
-      .filter(col("cos").isNotNull)
-      .select(col("query_id"), col("vec_id"), (round(col("cos"), 4) + 0.0).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
+    val lsh = lshRanked(emb, idCol, vecCol, queries, k, planes, maxHamming)
     val nl = lsh.groupBy(col("query_id")).agg(count(lit(1)).as("n_lsh"))
     val ov = exact.select(col("query_id"), col("vec_id"))
       .join(lsh.select(col("query_id"), col("vec_id")),
@@ -352,6 +315,33 @@ object Similarity {
       .join(ov, Seq("query_id"), "left_outer")
       .select(col("query_id"), coalesce(col("n_lsh"), lit(0L)).as("n_lsh"),
         coalesce(col("overlap"), lit(0L)).as("overlap"))
+  }
+
+  /** The LSH side of both index evals: each query's top-k (query_id,
+    * vec_id, cos, rk) among its Hamming-ball candidates — ONE bucketed scan
+    * joined (broadcast nested-loop against the B-row query-literal frame)
+    * on `bit_count(bucket ⊕ qbucket) ≤ maxHamming`, exact 4dp cosine. */
+  private def lshRanked(emb: DataFrame, idCol: String, vecCol: String,
+                        queries: Seq[(Long, Array[Double])], k: Int,
+                        planes: Array[Array[Double]], maxHamming: Int): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val qdf = broadcast(queries.map { case (qid, q) =>
+      (qid, bucketOf(q, planes), q.toSeq,
+        math.sqrt(q.map(x => x * x).sum))
+    }.toDF("query_id", "qbucket", "qvec", "qn"))
+    val v = col(vecCol).cast("array<double>")
+    withBucket(emb, vecCol, planes)
+      .join(qdf, bit_count(col("bucket").bitwiseXOR(col("qbucket"))
+        .cast("long")) <= maxHamming)
+      .select(col("query_id"), col(idCol).cast("long").as("vec_id"),
+        try_divide(dot(v, col("qvec").cast("array<double>")),
+          norm2(v) * col("qn")).as("cos"))
+      .filter(col("cos").isNotNull)
+      .select(col("query_id"), col("vec_id"), (round(col("cos"), 4) + 0.0).as("cos"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
+      .filter(col("rk") <= k)
   }
 
   /** L57 weights: the per-match RBO mass. RBO@k (Webber et al. 2010,
@@ -382,29 +372,12 @@ object Similarity {
                  queries: Seq[(Long, Array[Double])], k: Int,
                  planes: Array[Array[Double]],
                  maxHamming: Int = 2, p: Double = 0.9): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val exact = batchTopK(emb, idCol, vecCol, queries, k)
       .withColumn("re", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
       .select(col("query_id"), col("vec_id"), col("re"))
-    val qdf = broadcast(queries.map { case (qid, q) =>
-      (qid, bucketOf(q, planes), q.toSeq,
-        math.sqrt(q.map(x => x * x).sum))
-    }.toDF("query_id", "qbucket", "qvec", "qn"))
-    val v = col(vecCol).cast("array<double>")
-    val lsh = withBucket(emb, vecCol, planes)
-      .join(qdf, bit_count(col("bucket").bitwiseXOR(col("qbucket"))
-        .cast("long")) <= maxHamming)
-      .select(col("query_id"), col(idCol).cast("long").as("vec_id"),
-        try_divide(dot(v, col("qvec").cast("array<double>")),
-          graft.functions.VectorExprs.norm2(v) * col("qn")).as("cos"))
-      .filter(col("cos").isNotNull)
-      .select(col("query_id"), col("vec_id"), (round(col("cos"), 4) + 0.0).as("cos"))
-      .withColumn("rl", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rl") <= k)
-      .select(col("query_id"), col("vec_id"), col("rl"))
+    val lsh = lshRanked(emb, idCol, vecCol, queries, k, planes, maxHamming)
+      .select(col("query_id"), col("vec_id"), col("rk").as("rl"))
     val w = rboWeightsE9(k, p)
     val scored = exact.join(lsh, Seq("query_id", "vec_id"))
       .select(col("query_id"),
@@ -417,63 +390,20 @@ object Similarity {
 
   /** Batched ANN serving: exact top-k for a BATCH of query vectors in ONE
     * corpus scan — the serving shape (queries arrive in batches; scanning
-    * the corpus once per query would be B scans). The batch (B×dim
-    * doubles, a model-parameter-sized closure) rides into each partition;
-    * a bounded per-partition selection keeps the k best candidates per
-    * query (B·k entries per task — the partial top-k `TakeOrdered` uses
-    * internally, which Spark has no declarative per-group form of), and
-    * the global merge ranks only the B × partitions × k partials with a
-    * window. Scoring matches [[bruteForceTopK]] exactly: f64
-    * left-to-right dot, HALF_UP 4dp rounding (+0.0 collapses -0.0),
-    * zero-norm rows dropped, ties ranked by id. `excludeSelf` drops the
-    * corpus row whose id equals the query's own id — the kNN-GRAPH
-    * convention (scanpy pp.neighbors), where a node is not its own
-    * neighbor. */
+    * the corpus once per query would be B scans): [[heapPartials]] keeps
+    * each query's k best per partition (B·k entries per task — the
+    * partial top-k `TakeOrdered` uses internally, which Spark has no
+    * declarative per-group form of), and the global merge ranks only the
+    * B × partitions × k partials with a window. Per-query results equal
+    * [[bruteForceTopK]]'s. `excludeSelf` drops the corpus row whose id
+    * equals the query's own id — the kNN-GRAPH convention (scanpy
+    * pp.neighbors), where a node is not its own neighbor. */
   def batchTopK(emb: DataFrame, idCol: String, vecCol: String,
                 queries: Seq[(Long, Array[Double])], k: Int,
                 excludeSelf: Boolean = false): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val qs = queries.map { case (qid, q) =>
-      (qid, q, math.sqrt(q.map(x => x * x).sum))
-    }
-    // PQ dequeues its max; ordering by (-cos, id) makes "max" = the WORST
-    // kept candidate (lowest cos, then largest id), so replacement is O(log k)
-    val worstFirst = Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))
-    val partials = emb
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { rows =>
-        val heaps = qs.map(_ => new scala.collection.mutable.PriorityQueue[(Double, Long)]()(worstFirst))
-        rows.foreach { case (id, v) =>
-          var n2 = 0.0
-          var i = 0
-          while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(n2)
-          if (nrm > 0.0) qs.zip(heaps).foreach { case ((qid, q, qn), heap) =>
-            if (qn > 0.0 && q.length == v.length && !(excludeSelf && id == qid)) {
-              var d = 0.0
-              var j = 0
-              while (j < v.length) { d += v(j) * q(j); j += 1 } // left-to-right, = dot Expression
-              val cos = BigDecimal(d / (nrm * qn))
-                .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-              if (heap.size < k) heap.enqueue((cos, id))
-              else if (worstFirst.lt((cos, id), heap.head)) {
-                heap.dequeue(); heap.enqueue((cos, id))
-              }
-            }
-          }
-        }
-        qs.zip(heaps).iterator.flatMap { case ((qid, _, _), heap) =>
-          heap.iterator.map { case (cos, id) => (qid, id, cos) }
-        }
-      }
-      .toDF("query_id", "vec_id", "cos")
-    partials
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos"))
+    val qids = queries.map(_._1).toArray
+    rankPartials(heapPartials(emb, idCol, vecCol, lit(null), queries, k)(
+      (j, id, _) => excludeSelf && id == qids(j)), k)
   }
 
   /** L42: HARD-NEGATIVE MINING for contrastive/embedding training — for
@@ -481,60 +411,84 @@ object Similarity {
     * label (the classic "hardest negatives" batch construction; positives
     * and same-label near-misses are excluded at the scan). Same bounded
     * plan shape as [[batchTopK]]: ONE corpus scan for the whole anchor
-    * batch, per-partition partial top-k heaps (the label test is one
-    * string compare before any arithmetic), window merge of B·parts·k
-    * partials — the corpus is never shuffled and never scored twice.
-    * Null-label rows are not admissible negatives (their label is
-    * unknown, not different) and are skipped. Deterministic: 4dp-rounded
-    * cosine, ties → smaller vec_id — fully oracle-checked. */
+    * batch, per-partition partial top-k heaps (the label test runs before
+    * any arithmetic), window merge of B·parts·k partials — the corpus is
+    * never shuffled and never scored twice. Null-label rows are not
+    * admissible negatives (their label is unknown, not different) and are
+    * skipped. Deterministic: 4dp-rounded cosine, ties → smaller vec_id —
+    * fully oracle-checked. */
   def hardNegatives(emb: DataFrame, idCol: String, vecCol: String,
                     labelCol: String,
                     queries: Seq[(Long, String, Array[Double])],
                     k: Int): DataFrame = {
+    val labels = queries.map(_._2).toArray
+    rankPartials(heapPartials(emb, idCol, vecCol, col(labelCol),
+        queries.map(a => (a._1, a._3)), k)((j, _, lab) => lab == null || lab == labels(j)), k)
+  }
+
+  /** The per-partition exact top-k heap kernel behind [[batchTopK]],
+    * [[hardNegatives]] and [[ivfTopK]]: each query keeps its k best
+    * (cos desc, id) candidates in a [[TopK]], so only ≤ B·k partials per
+    * partition leave the scan. Scoring is [[bruteForceTopK]]'s: ordered
+    * f64 dot over ‖v‖·‖q‖; a row drops out when its vector is null or of
+    * another dimension or the denominator is 0 (try_divide's null); 4dp
+    * HALF_UP as Spark's `round` (NaN kept, +0.0 collapses -0.0).
+    * Ids are integral; `skip(j, id, label)` removes a row from query j's
+    * candidates. Output (query_id, vec_id, cos), unranked. */
+  private def heapPartials(emb: DataFrame, idCol: String, vecCol: String, label: Column,
+                           queries: Seq[(Long, Array[Double])], k: Int)(
+      skip: (Int, Long, String) => Boolean): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qs = queries.map { case (qid, ql, q) =>
-      (qid, ql, q, math.sqrt(q.map(x => x * x).sum))
-    }
-    val worstFirst = Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))
-    val partials = emb
-      .select(col(idCol).cast("long"), col(labelCol).cast("string"),
-        col(vecCol).cast("array<double>"))
-      .as[(Long, String, Array[Double])]
-      .mapPartitions { rows =>
-        val heaps = qs.map(_ =>
-          new scala.collection.mutable.PriorityQueue[(Double, Long)]()(worstFirst))
-        rows.foreach { case (id, lab, v) =>
-          if (lab != null) {
-            var n2 = 0.0
-            var i = 0
-            while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-            val nrm = math.sqrt(n2)
-            if (nrm > 0.0) qs.zip(heaps).foreach { case ((_, ql, q, qn), heap) =>
-              if (qn > 0.0 && q.length == v.length && lab != ql) {
-                var d = 0.0
-                var j = 0
-                while (j < v.length) { d += v(j) * q(j); j += 1 }
-                val cos = BigDecimal(d / (nrm * qn))
-                  .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-                if (heap.size < k) heap.enqueue((cos, id))
-                else if (worstFirst.lt((cos, id), heap.head)) {
-                  heap.dequeue(); heap.enqueue((cos, id))
-                }
-              }
-            }
+    val qids = queries.map(_._1).toArray
+    val qs = queries.map(_._2).toArray
+    val qns = qs.map(q => math.sqrt(dotOrdered(q, q)))
+    val rows = emb.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"),
+      label.cast("string")).as[(Long, Array[Double], String)]
+    rows.mapPartitions { it =>
+      val heaps = Array.fill(qs.length)(new TopK(k))
+      it.foreach { case (id, v, lab) =>
+        if (v != null) {
+          val nrm = math.sqrt(dotOrdered(v, v))
+          for (j <- qs.indices) {
+            val den = nrm * qns(j)
+            if (qs(j).length == v.length && den != 0.0 && !skip(j, id, lab))
+              heaps(j).offer(round4(dotOrdered(v, qs(j)) / den), id)
           }
         }
-        qs.zip(heaps).iterator.flatMap { case ((qid, _, _, _), heap) =>
-          heap.iterator.map { case (cos, id) => (qid, id, cos) }
-        }
       }
-      .toDF("query_id", "vec_id", "cos")
+      heaps.indices.iterator.flatMap(j =>
+        heaps(j).iterator.map { case (cos, id) => (qids(j), id, cos) })
+    }.toDF("query_id", "vec_id", "cos")
+  }
+
+  /** The global merge of [[heapPartials]]: top k per query_id. */
+  private def rankPartials(partials: DataFrame, k: Int): DataFrame =
     partials
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= k)
       .select(col("query_id"), col("vec_id"), col("cos"))
+
+  /** Spark's `round(c, 4)` on a double (NaN and ±∞ unchanged) plus 0.0. */
+  private def round4(c: Double): Double =
+    if (c.isNaN || c.isInfinite) c
+    else BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+
+  /** (cos, id) worst first: lower cos as Spark orders doubles (NaN
+    * highest, -0.0 = 0.0), then larger id. */
+  private val worstFirst: Ordering[(Double, Long)] = (a, b) => {
+    val c = SQLOrderingUtil.compareDoubles(b._1, a._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** The k best offered (cos, id); the head is the worst kept. */
+  private final class TopK(k: Int) {
+    private val heap = scala.collection.mutable.PriorityQueue.empty(worstFirst)
+    def offer(cos: Double, id: Long): Unit =
+      if (heap.size < k) heap.enqueue((cos, id))
+      else if (worstFirst.lt((cos, id), heap.head)) { heap.dequeue(); heap.enqueue((cos, id)) }
+    def iterator: Iterator[(Double, Long)] = heap.iterator
   }
 
   /** kNN label transfer (the classic "classify by nearest labeled
@@ -595,32 +549,25 @@ object Similarity {
     s
   }
 
-  /** Driver twin of `greatest(centroidScores(...)).getField("l")`: argmax
-    * cosine (safe centroid norm), ties → LARGER list id (struct greatest
-    * compares (s, l) lexicographically). `norms` are precomputed once per
-    * Lloyd step — centroids are fixed within a step, so per-row recompute
-    * would be pure waste, the same reason l2Scores bakes ‖c‖²/2 into the
-    * serving expression. */
-  private def assignCosine(x: Array[Double], cents: Array[Array[Double]],
-                           norms: Array[Double]): Int = {
-    var best = Double.NegativeInfinity; var bestL = 0
-    var l = 0
-    while (l < cents.length) {
-      val s = dotOrdered(x, cents(l)) / norms(l)
-      if (s >= best) { best = s; bestL = l }
-      l += 1
-    }
-    bestL
-  }
+  /** The `trainN` vectors with the smallest xxhash64(id): ONE TakeOrdered
+    * job, partition-order-independent — every driver-side trainer's
+    * sample. */
+  private def hashSample(emb: DataFrame, idCol: String, vecCol: String,
+                         trainN: Int): Array[Array[Double]] =
+    emb.select(col(vecCol).cast("array<double>").as("vec"), xxhash64(col(idCol)).as("h"))
+      .orderBy(col("h")).limit(trainN)
+      .collect().map(_.getSeq[Double](0).toArray)
 
-  /** Safe cosine denominators for a centroid set: ‖c‖, with 1.0 for the
-    * all-zero centroid (its dot is 0 either way; dividing by 0 is the
-    * ANSI hazard the serving twin also guards). */
-  private def safeNorms(cents: Array[Array[Double]]): Array[Double] =
-    cents.map { c =>
-      val n = math.sqrt(c.map(x => x * x).sum)
-      if (n == 0.0) 1.0 else n
-    }
+  /** [[hashSample]] for a `ksub`-code trainer: fails loudly when the
+    * corpus cannot seed `ksub` codes. */
+  private def ksubSample(emb: DataFrame, idCol: String, vecCol: String, ksub: Int,
+                         trainN: Int, who: String): Array[Array[Double]] = {
+    require(trainN >= ksub, s"trainN=$trainN must be >= ksub=$ksub")
+    val rows = hashSample(emb, idCol, vecCol, trainN)
+    require(rows.length >= ksub,
+      s"$who training needs >= ksub=$ksub vectors, corpus has ${rows.length}")
+    rows
+  }
 
   /** One deterministic Lloyd pass over in-memory rows: per-list per-dim
     * mean (sample order — fixed, since rows arrive hash-sorted), r6 grid;
@@ -644,29 +591,18 @@ object Similarity {
   }
 
   /** Deterministic IVF training, SAMPLE-BOUNDED and DRIVER-EXECUTED: the
-    * training set is the `trainN` vectors with the smallest xxhash64(id) —
-    * a fixed-size, partition-order-independent sample collected by ONE
-    * TakeOrdered job (trainN·dim doubles ≈ 2 MB — model-parameter-class
-    * driver traffic). That one sampling scan is the ONLY job training
-    * runs: the Lloyd loop itself is plain driver-side arithmetic. The
-    * distributed loop this replaces cost the same at sf0.01 and sf0.1 —
-    * its time was per-iteration Catalyst planning + codegen of
-    * nlist-wide greatest-of-structs expressions, a fixed overhead that
-    * sampling could never cut — while at 100 TB BOTH shapes scan the
-    * corpus once; this one just stops paying the fixed cost per
-    * iteration. Seeds are the nlist smallest-hash vectors (the sample's
-    * prefix — unchanged from full-corpus training); assignment replicates
-    * the serving expressions' exact math (ordered-fold dot, safe norms,
-    * ties → larger list id); means land on the r6 grid so the model is
-    * bit-stable across runs. Returns O(nlist·dim) doubles. */
+    * [[hashSample]] of `trainN` vectors (trainN·dim doubles ≈ 2 MB —
+    * model-parameter-class driver traffic) is the ONLY job training runs;
+    * the Lloyd loop is plain driver arithmetic with no per-iteration
+    * planning. Seeds are the nlist smallest-hash vectors; each Lloyd step
+    * assigns with [[IvfAssign.rank2]] — the routine [[withIvfList]] runs
+    * per row, so the model's lists are the lists serving assigns; means
+    * land on the r6 grid, so the model is bit-stable across runs. */
   def ivfCentroids(emb: DataFrame, idCol: String, vecCol: String,
                    nlist: Int, iters: Int = 1,
                    trainN: Int = 4096): Array[Array[Double]] = {
     require(trainN >= nlist, s"trainN=$trainN must be >= nlist=$nlist")
-    val v = col(vecCol).cast("array<double>")
-    val sample = emb.select(v.as("vec"), xxhash64(col(idCol)).as("h"))
-      .orderBy(col("h")).limit(trainN)
-      .collect().map(_.getSeq[Double](0).toArray)
+    val sample = hashSample(emb, idCol, vecCol, trainN)
     // fail degenerate corpora loudly: downstream treats list_id as an
     // exactly-nlist-wide partition key, so a silently narrower model (or
     // an AIOOBE from an empty seed set inside the Lloyd loop) is worse
@@ -674,59 +610,51 @@ object Similarity {
     require(sample.length >= nlist,
       s"IVF training needs >= nlist=$nlist vectors, corpus has ${sample.length}")
     var cents = sample.take(nlist)
-    for (_ <- 0 until iters) {
-      val norms = safeNorms(cents)
-      cents = lloydStep(sample, cents, assignCosine(_, cents, norms))
-    }
+    for (_ <- 0 until iters) cents = lloydStep(sample, cents, IvfAssign.lists(cents))
     cents
   }
 
-  /** The (cosine-to-centroid, list) structs shared by every IVF consumer —
-    * assignment, top-2 probing, streaming — so a scoring change can never
-    * desynchronize batch and stream list assignments. */
-  private def centroidScores(v: Column, centroids: Array[Array[Double]]): Seq[Column] =
-    centroids.zipWithIndex.map { case (c, l) =>
-      val cn = math.sqrt(c.map(x => x * x).sum)
-      // an all-zero centroid (zero-vector seed) scores 0 against everything
-      // either way; dividing by its 0 norm would be an ANSI hard error
-      val safeCn = if (cn == 0.0) 1.0 else cn
-      struct((dotLit(v, c) / lit(safeCn)).as("s"), lit(l).as("l"))
-    }
-
-  /** Assign each vector to its nearest (max-cosine) centroid list. The
-    * centroid matrix enters the plan as literals — nlist codegen'd dot
-    * products per row, no join, no shuffle. `list_id` is the storage
-    * partition / cluster key at scale. */
-  def withIvfList(emb: DataFrame, vecCol: String, centroids: Array[Array[Double]]): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    emb.withColumn("list_id", greatest(centroidScores(v, centroids): _*).getField("l"))
-  }
+  /** Assign each vector to its nearest (max-cosine, ties → larger id)
+    * centroid list: ONE codegen'd [[IvfAssign]] per row over the centroid
+    * matrix — no join, no shuffle. `list_id` is the storage partition /
+    * cluster key at scale. */
+  def withIvfList(emb: DataFrame, vecCol: String, centroids: Array[Array[Double]]): DataFrame =
+    emb.withColumn("list_id", ivfAssign(col(vecCol), centroids))
 
   /** IVF ANN top-k: score the query against all centroids driver-side
-    * (O(nlist·dim)), scan ONLY the `nprobe` nearest lists, exact cosine
-    * within. Unlike hyperplane LSH (whose Hamming-ball probe set covers
-    * ~35% of the corpus at 6 planes), the probed fraction here is
-    * ~nprobe/nlist and tunable independently of recall via training
-    * quality — with list_id as a storage partition key the other lists
-    * are never read at all. */
+    * (O(nlist·dim)), admit ONLY rows whose [[IvfAssign]] list is one of
+    * the `nprobe` nearest (a Catalyst filter — with list_id as a storage
+    * partition key the other lists are never read at all), then exact
+    * cosine within through the [[heapPartials]] kernel and a TakeOrdered
+    * merge of its ≤ k·partitions partials. Results equal
+    * [[bruteForceTopK]] over the probed lists: same schema (the id column
+    * keeps its name and integral type), (cos desc, id) order. Unlike
+    * hyperplane LSH (whose Hamming-ball probe set covers ~35% of the
+    * corpus at 6 planes), the probed fraction is ~nprobe/nlist. */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String, q: Array[Double],
               k: Int, centroids: Array[Array[Double]], nprobe: Int = 4): DataFrame = {
+    val probes = probeLists(q, centroids, nprobe, "ivfTopK")
+    val listed = emb.filter(ivfAssign(col(vecCol), centroids).isin(probes: _*))
+    heapPartials(listed, idCol, vecCol, lit(null), Seq((0L, q)), k)((_, _, _) => false)
+      .select(col("vec_id").cast(emb.schema(idCol).dataType).as(idCol), col("cos"))
+      .orderBy(col("cos").desc, col(idCol))
+      .limit(k)
+  }
+
+  /** The `nprobe` lists nearest `q` by cosine (safe centroid norms, as
+    * assignment scores them), ties → the LARGER list id: with duplicated
+    * centroids — which empty-list preservation makes legitimate — vectors
+    * live in the larger-id list, so the probe must prefer it too. A
+    * zero-norm query has no cosine (NaN scores would pick an arbitrary
+    * probe set): it fails loudly, matching cosineToQuery's null-out. */
+  private def probeLists(q: Array[Double], centroids: Array[Array[Double]],
+                         nprobe: Int, who: String): Seq[Int] = {
     val qn = math.sqrt(q.map(x => x * x).sum)
-    // a zero-norm query has no cosine: NaN probe scores would silently
-    // pick an arbitrary probe set (the centroid side is guarded below) —
-    // fail loudly instead, matching cosineToQuery's null-out contract
-    require(qn > 0, "ivfTopK: query vector has zero norm — cosine undefined")
-    // ties rank the LARGER list id first, matching the assignment rule
-    // (greatest over (s, l) structs): with duplicated centroids — which
-    // empty-list preservation makes legitimate — vectors live in the
-    // larger-id list, so the probe must prefer it too
-    val probes = centroids.zipWithIndex.map { case (c, l) =>
-      val cn = math.sqrt(c.map(x => x * x).sum)
-      (c.zip(q).map { case (a, b) => a * b }.sum / (cn * qn), l)
+    require(qn > 0, s"$who: query vector has zero norm — cosine undefined")
+    val norms = IvfAssign.safeNorms(centroids)
+    centroids.indices.map { l =>
+      (centroids(l).zip(q).map { case (a, b) => a * b }.sum / (norms(l) * qn), l)
     }.sortBy { case (cos, l) => (-cos, -l) }.take(nprobe).map(_._2)
-    val listed = withIvfList(emb, vecCol, centroids)
-      .filter(col("list_id").isin(probes.toSeq: _*))
-    bruteForceTopK(listed, idCol, vecCol, q, k)
   }
 
   /** Scalar int8 quantization of an embedding column in long form:
@@ -752,9 +680,9 @@ object Similarity {
   // ---- Product quantization (PQ) ----
 
   /** L2 k-means assignment scores as (score, l) structs: argmin_c |v−c|² =
-    * argmax_c (v·c − |c|²/2) since |v|² is constant per row — so assignment
-    * is the same codegen'd greatest-over-structs shape as [[centroidScores]]
-    * with no per-centroid norm computation on the data side. */
+    * argmax_c (v·c − |c|²/2) since |v|² is constant per row — a codegen'd
+    * greatest-over-structs with no per-centroid norm computation on the
+    * data side. */
   private def l2Scores(v: Column, cents: Array[Array[Double]]): Seq[Column] =
     cents.zipWithIndex.map { case (c, l) =>
       val half = c.map(x => x * x).sum / 2.0
@@ -774,28 +702,16 @@ object Similarity {
     * SAMPLE-BOUNDED and DRIVER-EXECUTED like [[ivfCentroids]]: ONE
     * TakeOrdered job collects the `trainN` smallest-xxhash64(id) rows
     * (≈2 MB — model-parameter-class driver traffic), then every subspace's
-    * Lloyd loop is plain driver arithmetic. The distributed loop this
-    * replaces spent its time compiling the m·ksub greatest-of-structs
-    * assignment expression per iteration — a fixed planning/codegen cost
-    * identical at sf0.01 and sf0.1 that sampling could never cut. At
-    * 100 TB both shapes scan the corpus once (the sample); training is
-    * otherwise corpus-size-independent. Seeds are the ksub smallest-hash
+    * Lloyd loop is plain driver arithmetic, corpus-size-independent and
+    * free of per-iteration planning. Seeds are the ksub smallest-hash
     * rows (the sample's prefix, shared across subspaces and sliced
     * driver-side); assignment replicates [[pqEncode]]'s exact scoring
     * (ordered-fold dot − ‖c‖²/2, ties → larger code); means land on the
     * r6 grid; empty clusters keep their previous centroid. */
   def pqTrain(emb: DataFrame, idCol: String, vecCol: String,
               m: Int = 8, ksub: Int = 16, iters: Int = 2,
-              trainN: Int = 4096): Array[Array[Array[Double]]] = {
-    require(trainN >= ksub, s"trainN=$trainN must be >= ksub=$ksub")
-    val rows = emb.select(col(vecCol).cast("array<double>").as("vec"),
-        xxhash64(col(idCol)).as("h"))
-      .orderBy(col("h")).limit(trainN)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(rows.length >= ksub,
-      s"PQ training needs >= ksub=$ksub vectors, corpus has ${rows.length}")
-    pqTrainRows(rows, m, ksub, iters)
-  }
+              trainN: Int = 4096): Array[Array[Array[Double]]] =
+    pqTrainRows(ksubSample(emb, idCol, vecCol, ksub, trainN, "PQ"), m, ksub, iters)
 
   /** The driver-side per-subspace Lloyd core shared by [[pqTrain]] (raw
     * vectors) and [[ivfPqTrain]] (IVF residuals). */
@@ -883,26 +799,27 @@ object Similarity {
 
   /** Train residual PQ codebooks against an existing IVF model. The same
     * `trainN`-row sample as [[pqTrain]]; each sample vector is assigned
-    * driver-side with [[assignCosine]] (exact parity with
-    * [[withIvfList]]'s greatest-of-structs rule, ties → larger list) and
-    * its residual feeds the shared per-subspace Lloyd core. */
+    * driver-side with [[IvfAssign.rank2]] (the routine [[withIvfList]]
+    * runs per row) and its residual feeds the shared per-subspace Lloyd
+    * core. */
   def ivfPqTrain(emb: DataFrame, idCol: String, vecCol: String,
                  centroids: Array[Array[Double]],
                  m: Int = 8, ksub: Int = 16, iters: Int = 2,
-                 trainN: Int = 4096): Array[Array[Array[Double]]] = {
-    require(trainN >= ksub, s"trainN=$trainN must be >= ksub=$ksub")
-    val rows = emb.select(col(vecCol).cast("array<double>").as("vec"),
-        xxhash64(col(idCol)).as("h"))
-      .orderBy(col("h")).limit(trainN)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(rows.length >= ksub,
-      s"IVF-PQ training needs >= ksub=$ksub vectors, corpus has ${rows.length}")
-    val norms = safeNorms(centroids)
-    val residuals = rows.map { x =>
-      val c = centroids(assignCosine(x, centroids, norms))
+                 trainN: Int = 4096): Array[Array[Array[Double]]] =
+    pqTrainRows(ivfResiduals(emb, idCol, vecCol, centroids, ksub, trainN, "IVF-PQ"),
+      m, ksub, iters)
+
+  /** The `trainN`-row hash sample's IVF residuals x − c[list(x)], lists by
+    * [[IvfAssign.rank2]] — the training set of [[ivfPqTrain]] and
+    * [[ivfOpqTrain]]. */
+  private def ivfResiduals(emb: DataFrame, idCol: String, vecCol: String,
+                           centroids: Array[Array[Double]], ksub: Int, trainN: Int,
+                           who: String): Array[Array[Double]] = {
+    val assign = IvfAssign.lists(centroids)
+    ksubSample(emb, idCol, vecCol, ksub, trainN, who).map { x =>
+      val c = centroids(assign(x))
       Array.tabulate(x.length)(i => x(i) - c(i))
     }
-    pqTrainRows(residuals, m, ksub, iters)
   }
 
   /** Encode vectors as (vec_id, list_id, codes): one scan, no join — the
@@ -912,17 +829,26 @@ object Similarity {
     * compressed store schema, partitionable by `list_id`. */
   def ivfPqEncode(emb: DataFrame, idCol: String, vecCol: String,
                   centroids: Array[Array[Double]],
-                  codebooks: Array[Array[Array[Double]]]): DataFrame = {
+                  codebooks: Array[Array[Array[Double]]]): DataFrame =
+    ivfEncode(emb, idCol, vecCol, centroids, codebooks, identity)
+
+  /** The shared IVF-PQ/OPQ encode: list, residual (an in-plan `transform`
+    * against the centroid literal), the residual mapped into the code
+    * space (`space`), and per subspace the greatest-of-structs argmin. */
+  private def ivfEncode(emb: DataFrame, idCol: String, vecCol: String,
+                        centroids: Array[Array[Double]],
+                        codebooks: Array[Array[Array[Double]]],
+                        space: Column => Column): DataFrame = {
     val v = col(vecCol).cast("array<double>")
     val centsLit = typedlit(centroids.map(_.toSeq).toSeq)
     val sd = codebooks(0)(0).length
-    val listed = withIvfList(emb, vecCol, centroids)
     val resid = transform(v,
       (x, i) => x - element_at(element_at(centsLit, col("list_id") + 1), i + 1))
     val codes = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      greatest(l2Scores(slice(col("_resid"), j * sd + 1, sd), cb): _*).getField("l")
+      greatest(l2Scores(slice(col("_space"), j * sd + 1, sd), cb): _*).getField("l")
     }: _*)
-    listed.withColumn("_resid", resid)
+    withIvfList(emb, vecCol, centroids)
+      .withColumn("_resid", resid).withColumn("_space", space(col("_resid")))
       .select(col(idCol).as("vec_id"), col("list_id"), codes.as("codes"))
   }
 
@@ -947,14 +873,7 @@ object Similarity {
                          codebooks: Array[Array[Array[Double]]],
                          q: Array[Double], lutQ: Array[Double], k: Int,
                          nprobe: Int, who: String): DataFrame = {
-    val qn = math.sqrt(q.map(x => x * x).sum)
-    // same zero-norm guard as ivfTopK: NaN probe cosines AND NaN LUT
-    // entries would return an arbitrary ranking with no error
-    require(qn > 0, s"$who: query vector has zero norm — cosine undefined")
-    val probes = centroids.zipWithIndex.map { case (c, l) =>
-      val cn = math.sqrt(c.map(x => x * x).sum)
-      (c.zip(q).map { case (a, b) => a * b }.sum / ((if (cn == 0.0) 1.0 else cn) * qn), l)
-    }.sortBy { case (cos, l) => (-cos, -l) }.take(nprobe).map(_._2)
+    val probes = probeLists(q, centroids, nprobe, who)
     val ipConsts: Seq[Double] = centroids.map(c => dotOrdered(q, c)).toSeq
     val sd = codebooks(0)(0).length
     val luts: Array[Seq[Double]] = codebooks.zipWithIndex.map { case (cb, j) =>
@@ -964,7 +883,7 @@ object Similarity {
       element_at(typedlit(lut), element_at(col("codes"), j + 1) + 1)
     }.reduce(_ + _)
     val score = element_at(typedlit(ipConsts), col("list_id") + 1) + residScore
-    codes.filter(col("list_id").isin(probes.toSeq: _*))
+    codes.filter(col("list_id").isin(probes: _*))
       .select(col("vec_id"), (round(score, 4) + 0.0).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
@@ -1058,18 +977,7 @@ object Similarity {
                   m: Int = 8, ksub: Int = 16, iters: Int = 2,
                   trainN: Int = 4096)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    require(trainN >= ksub, s"trainN=$trainN must be >= ksub=$ksub")
-    val rows = emb.select(col(vecCol).cast("array<double>").as("vec"),
-        xxhash64(col(idCol)).as("h"))
-      .orderBy(col("h")).limit(trainN)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(rows.length >= ksub,
-      s"IVF-OPQ training needs >= ksub=$ksub vectors, corpus has ${rows.length}")
-    val norms = safeNorms(centroids)
-    val residuals = rows.map { x =>
-      val c = centroids(assignCosine(x, centroids, norms))
-      Array.tabulate(x.length)(i => x(i) - c(i))
-    }
+    val residuals = ivfResiduals(emb, idCol, vecCol, centroids, ksub, trainN, "IVF-OPQ")
     val dim = residuals(0).length
     require(dim % m == 0, s"dim=$dim not divisible by m=$m subspaces")
     val mom = Array.tabulate(dim, dim) { (i, j) =>
@@ -1101,23 +1009,12 @@ object Similarity {
   def ivfOpqEncode(emb: DataFrame, idCol: String, vecCol: String,
                    centroids: Array[Array[Double]],
                    rotation: Array[Array[Double]],
-                   codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val centsLit = typedlit(centroids.map(_.toSeq).toSeq)
-    val sd = codebooks(0)(0).length
-    val listed = withIvfList(emb, vecCol, centroids)
-    val resid = transform(v,
-      (x, i) => x - element_at(element_at(centsLit, col("list_id") + 1), i + 1))
+                   codebooks: Array[Array[Array[Double]]]): DataFrame =
     // the rotation is ONE codegen'd MatVec (X-pattern kernel) — dim²
     // literal-term expressions fall out of whole-stage codegen and run
     // interpreted (measured ~7 s extra on the sf0.1 encode)
-    val rotCol = graft.functions.VectorExprs.matVec(col("_resid"), rotation)
-    val codes = array(codebooks.zipWithIndex.map { case (cb, j) =>
-      greatest(l2Scores(slice(col("_rot"), j * sd + 1, sd), cb): _*).getField("l")
-    }: _*)
-    listed.withColumn("_resid", resid).withColumn("_rot", rotCol)
-      .select(col(idCol).as("vec_id"), col("list_id"), codes.as("codes"))
-  }
+    ivfEncode(emb, idCol, vecCol, centroids, codebooks,
+      graft.functions.VectorExprs.matVec(_, rotation))
 
   /** IVF-OPQ ADC top-k: identical plan shape and cost to [[ivfPqTopK]]
     * (same probes, same m LUT picks per row, same partition-pruning
@@ -1130,108 +1027,111 @@ object Similarity {
     ivfAdcTopK(codes, centroids, codebooks, q, rq, k, nprobe, "ivfOpqTopK")
   }
 
-  /** Top-2 IVF lists per vector (primary + runner-up) via one array_sort
-    * over the shared [[centroidScores]] structs — O(nlist log nlist) per
-    * row on a parameter-sized array, no join. */
-  private def withIvfTop2(emb: DataFrame, vecCol: String,
-                          centroids: Array[Array[Double]]): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val sorted = array_sort(array(centroidScores(v, centroids): _*)) // ascending by (s, l)
-    // single-centroid model: ANSI mode makes element_at(..., -2) a hard
-    // error on a 1-element array — degrade to primary = runner-up instead
-    val second = if (centroids.length >= 2) element_at(sorted, -2) else element_at(sorted, -1)
-    emb.withColumn("list_id", element_at(sorted, -1).getField("l"))
-      .withColumn("list2_id", second.getField("l"))
-  }
-
-  /** Embedding near-dup with IVF-pruned candidates: each vector is
-    * multi-assigned to its top-2 lists and pairs are generated within a
-    * SHARED probe list (both sides exploded — "x's top-2 contains y's
-    * primary" is not symmetric, so a one-sided probe would miss about half
-    * the boundary-straddling configurations; sharing any of the 2×2 list
-    * combinations is symmetric). Duplicate candidates collapse in the
-    * final (id1, id2) aggregate.
-    *
-    * The quadratic term is bounded the same way minhash/simhash bound a
-    * bucket (maxBucket): a per-list row_number cap — sorted by doc_id, so
-    * truncation is deterministic — keeps one hot list (a dense embedding
-    * cluster, the NORM in near-dup corpora) from degenerating to
-    * (N/nlist)² pairs. The cap runs as a streaming sort-window (spills;
-    * never buffers the list), and only THEN does a single capped-bucket
-    * aggregation (buffer ≤ maxList vectors) emit the in-list cross
-    * product — one corpus scan, no self-join. list_id remains the storage
-    * partition key, so candidate generation co-locates with the quantized
-    * store. Rows-only entry: the centroid training loop is not
+  /** Embedding near-dup with IVF-pruned candidates: pairs with raw cos ≥
+    * `minCos` (as Spark compares doubles: NaN passes) within a SHARED
+    * list of [[ivfListPairs]] — each vector sits in its top-2 lists, and
+    * sharing any of the 2×2 list combinations is symmetric where a
+    * one-sided probe would miss about half the boundary-straddling pairs.
+    * A pair sharing both lists collapses in the final (id1, id2) max,
+    * rounded to 4dp. Rows-only entry: the centroid training loop is not
     * SQL-expressible (recall vs exact pairs is scalatest-asserted). */
   def nearDupPairsIvf(emb: DataFrame, idCol: String, vecCol: String,
                       centroids: Array[Array[Double]], minCos: Double,
                       maxList: Int = 1000): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    // array_distinct: with a single-centroid (or duplicated-centroid)
-    // model, primary == runner-up — an undeduped explode would emit the
-    // same (doc, probe) row twice, consuming two cap slots per doc and
-    // quadrupling pair generation
-    val probed = withIvfTop2(emb, vecCol, centroids)
-      .select(col(idCol).as("doc_id"), v.as("vec"), norm2(v).as("nrm"),
-        explode(array_distinct(array(col("list_id"), col("list2_id")))).as("probe"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe")).orderBy(col("doc_id"))))
-      .filter(col("rk") <= maxList)
-    probed.groupBy(col("probe"))
-      .agg(collect_list(struct(col("doc_id"), col("vec"), col("nrm"))).as("es"))
-      .filter(size(col("es")) > 1)
-      .select(explode(col("es")).as("l"), col("es"))
-      .select(col("l"), explode(col("es")).as("r"))
-      .filter(col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("id1"), col("r.doc_id").as("id2"),
-        try_divide(dot(col("l.vec"), col("r.vec")),
-          col("l.nrm") * col("r.nrm")).as("cos")) // null for zero-norm rows
-      .filter(col("cos") >= minCos)
-      .groupBy(col("id1"), col("id2")).agg(round(max(col("cos")), 4).as("cos"))
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val idType = emb.schema(idCol).dataType
+    ivfListPairs(emb, idCol, vecCol, centroids, maxList) { ids =>
+      new PairSink[(Long, Long, Double)] {
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+        def pair(a: Int, b: Int, cos: Double): Unit =
+          if (SQLOrderingUtil.compareDoubles(cos, minCos) >= 0) out += ((ids(a), ids(b), cos))
+        def rows: Iterator[(Long, Long, Double)] = out.iterator
+      }
+    }.toDF("id1", "id2", "cos")
+      .groupBy(col("id1").cast(idType).as("id1"), col("id2").cast(idType).as("id2"))
+      .agg(round(max(col("cos")), 4).as("cos"))
+  }
+
+  /** The capped per-list stage of [[nearDupPairsIvf]] and [[knnGraphIvf]]:
+    * each vector joins its top-2 [[IvfAssign]] lists, ONE shuffle by list,
+    * and a spillable sort by (list, id) streams each list's first
+    * `maxList` members by id — a deterministic cap that keeps a hot list
+    * (a dense cluster, the norm in near-dup corpora) from going
+    * (N/nlist)², never buffering more than maxList vectors. The list's
+    * `perList` sink gets its ids (ascending) and every scorable pair
+    * (a, b, raw f64 cos), a < b as indices; a pair drops out when a vector
+    * is null, the dimensions differ or the norm product is 0 (try_divide's
+    * null). Ids are integral. */
+  private def ivfListPairs[T: org.apache.spark.sql.Encoder](
+      emb: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Double]], maxList: Int)(
+      perList: Array[Long] => PairSink[T]): org.apache.spark.sql.Dataset[T] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    emb.select(explode(array_distinct(ivfAssign(col(vecCol), centroids, top2 = true)))
+        .as("probe"), col(idCol).cast("long").as("id"),
+        col(vecCol).cast("array<double>").as("vec"))
+      .repartition(col("probe")).sortWithinPartitions(col("probe"), col("id"))
+      .as[(Int, Long, Array[Double])].mapPartitions { rows =>
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val probe = it.head._1
+          val list = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
+          while (it.hasNext && it.head._1 == probe) {
+            val r = it.next()
+            if (list.size < maxList) list += ((r._2, r._3))
+          }
+          val (ids, vs) = (list.map(_._1).toArray, list.map(_._2).toArray)
+          val ns = vs.map(v => if (v == null) 0.0 else math.sqrt(dotOrdered(v, v)))
+          val sink = perList(ids)
+          for (a <- ids.indices; b <- a + 1 until ids.length)
+            if (vs(a) != null && vs(b) != null && vs(a).length == vs(b).length &&
+                ids(a) != ids(b) && ns(a) * ns(b) != 0.0)
+              sink.pair(a, b, dotOrdered(vs(a), vs(b)) / (ns(a) * ns(b)))
+          sink.rows
+        }
+      }
+  }
+
+  /** Receives one IVF list's scorable pairs, then yields its output rows. */
+  private trait PairSink[T] {
+    def pair(a: Int, b: Int, cos: Double): Unit
+    def rows: Iterator[T]
   }
 
   /** Full-corpus kNN GRAPH (the scanpy `pp.neighbors` shape): every node's
-    * k nearest neighbors by cosine, excluding itself. Exact kNN for N nodes
-    * is an N×N problem; candidates are bounded to the node's top-2 IVF
-    * lists — the same multi-probe+capped-list shape as [[nearDupPairsIvf]]
-    * (one corpus scan, no self-join, per-list cap keeps a hot list from
-    * going quadratic), but emitting DIRECTED edges: (src, dst) and
-    * (dst, src) are both candidates, each ranked within its own src
-    * partition. Cross-probe duplicates collapse in a (src, dst) max-agg
-    * before the per-src window ranks the k best. At 100 TB: list_id is the
-    * storage partition key, candidate generation co-locates with the
-    * store, and the final rank is a window over ≤ maxList·2 candidates per
-    * node — never the corpus. Rows-only entry (IVF training loop is not
-    * SQL); recall vs the exact graph is scalatest-asserted, and the exact
-    * twin `graph_knn` (batchTopK + excludeSelf) is the oracle-checked
-    * path. */
+    * k nearest neighbors by cosine, excluding itself, among the candidates
+    * of [[ivfListPairs]] — never N². Per list every src keeps an exact
+    * [[TopK]] on (raw cos desc, dst); ONE shuffle by src merges each
+    * node's ≤ 2k candidates (a dst seen through both lists counts once),
+    * takes k and rounds to 4dp (+0.0). That is exactly the top k of all
+    * its candidates: each winner is in the top k of the list it scores
+    * best in. Rows-only entry (IVF training loop is not SQL); recall vs
+    * the exact graph is scalatest-asserted, and the exact twin
+    * `graph_knn` (batchTopK + excludeSelf) is the oracle-checked path. */
   def knnGraphIvf(emb: DataFrame, idCol: String, vecCol: String,
                   centroids: Array[Array[Double]], k: Int,
                   maxList: Int = 1000): DataFrame = {
-    val v = col(vecCol).cast("array<double>")
-    val probed = withIvfTop2(emb, vecCol, centroids)
-      .select(col(idCol).as("doc_id"), v.as("vec"), norm2(v).as("nrm"),
-        explode(array_distinct(array(col("list_id"), col("list2_id")))).as("probe"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("probe")).orderBy(col("doc_id"))))
-      .filter(col("rk") <= maxList)
-    probed.groupBy(col("probe"))
-      .agg(collect_list(struct(col("doc_id"), col("vec"), col("nrm"))).as("es"))
-      .filter(size(col("es")) > 1)
-      .select(explode(col("es")).as("l"), col("es"))
-      .select(col("l"), explode(col("es")).as("r"))
-      .filter(col("l.doc_id") =!= col("r.doc_id")) // directed; no self-loop
-      .select(col("l.doc_id").as("src"), col("r.doc_id").as("dst"),
-        try_divide(dot(col("l.vec"), col("r.vec")),
-          col("l.nrm") * col("r.nrm")).as("cos")) // null for zero-norm rows
-      .filter(col("cos").isNotNull)
-      // a pair sharing BOTH probe lists is generated twice — collapse
-      // before ranking so it can't occupy two of src's k slots
-      .groupBy(col("src"), col("dst")).agg(max(col("cos")).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))))
-      .filter(col("rk") <= k)
-      .select(col("src"), col("dst"), (round(col("cos"), 4) + 0.0).as("cos"))
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val idType = emb.schema(idCol).dataType
+    ivfListPairs(emb, idCol, vecCol, centroids, maxList) { ids =>
+      new PairSink[(Long, Long, Double)] {
+        val heaps = Array.fill(ids.length)(new TopK(k))
+        def pair(a: Int, b: Int, cos: Double): Unit = {
+          heaps(a).offer(cos, ids(b)); heaps(b).offer(cos, ids(a))
+        }
+        def rows: Iterator[(Long, Long, Double)] = ids.indices.iterator.flatMap(a =>
+          heaps(a).iterator.map { case (cos, dst) => (ids(a), dst, cos) })
+      }
+    }.groupByKey(_._1).flatMapGroups { (src, cands) =>
+      val top = new TopK(k)
+      cands.map(c => c._2 -> c._3).toMap.foreach { case (dst, cos) => top.offer(cos, dst) }
+      top.iterator.map { case (cos, dst) => (src, dst, cos) }
+    }.toDF("src", "dst", "cos")
+      .select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"),
+        (round(col("cos"), 4) + 0.0).as("cos"))
   }
 
   /** Mutual-kNN restriction of a directed kNN edge set: keep (a, b) only

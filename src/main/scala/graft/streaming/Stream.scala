@@ -304,11 +304,11 @@ object Stream {
 
   /** Streaming IVF index maintenance: vectors arriving on a stream are
     * assigned their inverted-list id in-flight with the batch-trained
-    * centroid model (codegen'd dot products — stateless, no watermark, no
-    * shuffle), the shape that keeps an ANN index current under continuous
-    * ingest: in production the sink is a foreachBatch upsert into the
-    * list-partitioned store; here it's the memory sink so the result can
-    * be checked against the batch assignment. */
+    * centroid model (one codegen'd IvfAssign per row — stateless, no
+    * watermark, no shuffle), the shape that keeps an ANN index current
+    * under continuous ingest: in production the sink is a foreachBatch
+    * upsert into the list-partitioned store; here it's the memory sink so
+    * the result can be checked against the batch assignment. */
   def ivfAssignStream(spark: SparkSession, sfDir: String,
                       centroids: Array[Array[Double]]): DataFrame = {
     val sfName = sfDir.replaceAll("[^A-Za-z0-9]", "_")
@@ -775,10 +775,10 @@ object Stream {
     val sfName = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val raw = schemas.computeIfAbsent(s"$sfDir/documents",
       _ => spark.read.parquet(s"$sfDir/documents.parquet").schema)
-    // r21: the three fitted artifacts come from the shared model store —
-    // the SAME pool frames the batch hybrid query fuses (bm25KwPoolCached /
-    // vecPoolCached re-apply the defining order after the store
-    // round-trip, so the collected pool order is unchanged)
+    // the three fitted artifacts are the session-cached ones — the SAME
+    // pool frames the batch hybrid query fuses (bm25KwPoolCached /
+    // vecPoolCached re-apply the defining order over their checkpoint,
+    // so the collected pool order is unchanged)
     val (idf, n, tl) = Similarity.bm25ModelCached(spark, sfDir, terms)
     val kwPool = Similarity.bm25KwPoolCached(spark, sfDir, terms, poolK)
       .collect().map(r => (r.getLong(0), r.getLong(1))) // (id, _kw), pool order
